@@ -125,15 +125,4 @@ object Jdbc {
     val st = conn.prepareStatement(sql)
     try { st.setLong(1, epochId); st.executeUpdate(); () } finally st.close()
   }
-
-  private def tableExists(conn: java.sql.Connection, table: String): Boolean = {
-    val md = conn.getMetaData
-    // unquoted identifiers fold per the database's rule (Derby/Postgres
-    // differ) — probe the folded spellings
-    Seq(table, table.toUpperCase(java.util.Locale.ROOT),
-        table.toLowerCase(java.util.Locale.ROOT)).distinct.exists { t =>
-      val rs = md.getTables(null, null, t, null)
-      try rs.next() finally rs.close()
-    }
-  }
 }

@@ -1,9 +1,11 @@
 package graft.stream
 
+import java.util.concurrent.{CompletionException, Executors}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.Schemas
 
 /** Streaming ingest (SURVEY.md §2.9 T1/T2/T7): the Spark re-expression of
@@ -111,38 +113,78 @@ object Ingest {
       .partitionBy(parts :+ "epoch": _*)
       .parquet(path)
 
-  /** T1/T2 end-to-end: one streaming pass, three routed sinks via
-    * foreachBatch (the Spark form of insert_to_database's routing,
-    * AIRWISEv0.py:159-234). Writes are epoch-idempotent — see
-    * [[writeEpochParquet]]. */
-  def runIngest(raw: DataFrame, dim: DataFrame, outDir: String,
-                checkpoint: String,
-                trigger: Trigger = Trigger.AvailableNow()
-               ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val routed = routePackets(parseEnvelope(raw))
-    routed.writeStream
+  /** One micro-batch's routed sinks (the tables of insert_to_database,
+    * AIRWISEv0.py:159-234): (table, rows, day-partitioned). Both sinks land
+    * exactly these frames. */
+  private def routes(b: DataFrame, dim: DataFrame): Seq[(String, DataFrame, Boolean)] = {
+    val arrival = current_timestamp()
+    Seq(
+      ("airwise_data", enrich(parseEnvironment(b, arrival), dim), true),
+      ("battery_data", enrich(parseBattery(b, arrival), dim), false),
+      ("airwise_datav1", enrich(parseV1Text(b, arrival), dim), true))
+  }
+
+  /** One streaming pass over the routed packets; each micro-batch is
+    * persisted once (every one of its [[routes]] reads it) and handed to
+    * `land` with its epoch id. */
+  private def startRouted(raw: DataFrame, checkpoint: String, trigger: Trigger)
+                         (land: (DataFrame, Long) => Unit): StreamingQuery =
+    routePackets(parseEnvelope(raw)).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val arrival = current_timestamp()
         val b = batch.persist()
-        // facts land day-partitioned on device time (Layout rationale:
-        // time-range queries prune whole directories)
-        def ds(df: DataFrame): DataFrame = df.withColumn("ds",
-          date_format(timestamp_seconds(col("timestamp_node")), "yyyy-MM-dd"))
-        try {
-          writeEpochParquet(ds(enrich(parseEnvironment(b, arrival), dim)),
-            epochId, s"$outDir/airwise_data", Seq("ds"))
-          writeEpochParquet(enrich(parseBattery(b, arrival), dim),
-            epochId, s"$outDir/battery_data", Seq.empty)
-          writeEpochParquet(ds(enrich(parseV1Text(b, arrival), dim)),
-            epochId, s"$outDir/airwise_datav1", Seq("ds"))
-          ()
-        } finally { b.unpersist(); () }
+        try land(b, epochId) finally { b.unpersist(); () }
       }
       .start()
+
+  /** Runs every write at once, one pool thread each, and returns only when
+    * all have finished; then the first failure (in `writes` order) is
+    * rethrown with the others suppressed onto it, so a failed batch never
+    * leaves a write running. Each thread carries the calling thread's
+    * Spark local properties — for a micro-batch the streaming query's job
+    * group, so `stop()` cancels in-flight writes, and its SQL execution
+    * id — and its active session. */
+  private def runConcurrently(spark: SparkSession, writes: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(writes.size)
+    try {
+      val pending = writes.map(w => SQLExecution.withThreadLocalCaptured(spark, pool)(w()))
+      // join() waits through interrupts: stop() interrupts the batch
+      // thread, which must still outlast the writes it started
+      val failures = pending.flatMap { f =>
+        try { f.join(); None } catch { case e: CompletionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
+
+  /** T1/T2 end-to-end: one streaming pass, three routed sinks via
+    * foreachBatch (the Spark form of insert_to_database's routing,
+    * AIRWISEv0.py:159-234). Writes are epoch-idempotent — see
+    * [[writeEpochParquet]]. The three writes of a micro-batch run
+    * concurrently ([[runConcurrently]]): each is a Spark job of nearly
+    * fixed cost however few its rows, so serially a small batch pays
+    * that cost three times over. */
+  def runIngest(raw: DataFrame, dim: DataFrame, outDir: String,
+                checkpoint: String,
+                trigger: Trigger = Trigger.AvailableNow()
+               ): StreamingQuery =
+    startRouted(raw, checkpoint, trigger) { (b, epochId) =>
+      runConcurrently(b.sparkSession.asInstanceOf[SparkSession], routes(b, dim).map {
+        case (table, df, daily) => () =>
+          // facts land day-partitioned on device time (Layout rationale:
+          // time-range queries prune whole directories)
+          if (daily)
+            writeEpochParquet(df.withColumn("ds",
+              date_format(timestamp_seconds(col("timestamp_node")), "yyyy-MM-dd")),
+              epochId, s"$outDir/$table", Seq("ds"))
+          else writeEpochParquet(df, epochId, s"$outDir/$table", Seq.empty)
+      })
+    }
 
   /** [[runIngest]] wired from env config (sink dir, checkpoint, trigger). */
   def runIngest(raw: DataFrame, dim: DataFrame, cfg: GraftConfig
@@ -236,25 +278,12 @@ object Ingest {
                     checkpoint: String,
                     props: java.util.Properties = new java.util.Properties,
                     trigger: Trigger = Trigger.AvailableNow()
-                   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val routed = routePackets(parseEnvelope(raw))
-    routed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val arrival = current_timestamp()
-        val b = batch.persist()
-        try {
-          graft.sources.Jdbc.writeEpoch(
-            enrich(parseEnvironment(b, arrival), dim), url, "airwise_data", epochId, props)
-          graft.sources.Jdbc.writeEpoch(
-            enrich(parseBattery(b, arrival), dim), url, "battery_data", epochId, props)
-          graft.sources.Jdbc.writeEpoch(
-            enrich(parseV1Text(b, arrival), dim), url, "airwise_datav1", epochId, props)
-          ()
-        } finally { b.unpersist(); () }
+                   ): StreamingQuery =
+    startRouted(raw, checkpoint, trigger) { (b, epochId) =>
+      // one route after another: writeEpoch issues CREATE TABLE through
+      // Spark's writer, and concurrent DDL on one catalog risks lock waits
+      routes(b, dim).foreach { case (table, df, _) =>
+        graft.sources.Jdbc.writeEpoch(df, url, table, epochId, props)
       }
-      .start()
-  }
+    }
 }
