@@ -105,20 +105,6 @@ object Bench {
         Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(80)}")
       }
     }
-    // r12: the interval-overlap family's one-scan DISK_ONLY persist dedupes
-    // through the CacheManager by canonical plan, so without a clear an
-    // alphabetically-earlier family member hands later members a warm
-    // session-day frame (the r12 sweep showed auto 4.8 s cold-build vs
-    // join 3.6 s cache-fed — a pure order artifact between two identical
-    // plans). Drop exactly that frame BEFORE each family member's pair of
-    // runs (surgical unpersist, NOT a global clearCache — auto_interval_
-    // overlap sits mid auto-block and a global clear would de-cache the
-    // memo frames its census siblings are still reading): run 1 pays the
-    // full sessionize+persist cold, run 2 re-reads the materialization
-    // (that reuse IS the one-scan design and Bench's warm best-of-2
-    // convention), and every member — auto, exact, min — meets identical
-    // cache state regardless of sweep order.
-    def intervalFamily(n: String): Boolean = n.contains("interval_overlap")
     // untimed calibration warms first: the sentinel's own codegen/JIT
     // must not read as "contention" (first measured cut: start 0.55 s vs
     // mid 0.17 s on a QUIET host — pure first-compile cost, ratio 3.5
@@ -129,53 +115,14 @@ object Bench {
     var calMid = 0.0
     val results = selected.zipWithIndex.map { case ((name, fn), i) =>
       if (i == selected.size / 2) calMid = calibrate()
-      if (intervalFamily(name))
-        graft.ext.Sessions.unpersistSessionDays(graft.Tables.events(spark, sfDir))
+      // every query meets the same cold state, whatever ran before it:
+      // run 1 pays its memo builds, run 2 reads them (best-of-2 is warm)
+      Memo.releaseAll(spark)
+      spark.catalog.clearCache()
       val r = (timeOnce(fn), timeOnce(fn)) match {
         case (Right(a), Right(b)) => Right(math.min(a, b))
         case (Left(e), _)         => Left(e)
         case (_, Left(e))         => Left(e)
-      }
-      // once the dedup family is done its shared memoized frames have no
-      // further consumers — drop them so no cached partitions linger into
-      // later queries' memory budget (outside the timed region). r11: the
-      // auto_*/_capped forms also build memo frames (and sort FIRST
-      // alphabetically, so their frames would otherwise stay resident
-      // across the whole a..d span — the in-sweep dedup_winnowing 33 s vs
-      // 6.8 s pinned was exactly that residency); family membership is by
-      // substring, not prefix. r12: the clear fired MID auto-block
-      // (auto_embedding_dedup / auto_ngram_jaccard are dedup-named and
-      // their alphabetical successors are not), wiping the census memo
-      // frames auto_triangles / auto_local_clustering were about to
-      // reuse — the record showed every census auto at a phantom ~1.5×
-      // its exact twin purely from that ordering. The memo-user REGION is
-      // the right clear boundary: the auto_* block, the dedup names, and
-      // the graph census block each release their frames when the sweep
-      // LEAVES them (same first-member-absorbs-the-build convention the
-      // dedup note documents).
-      // r13 (r12 ADVICE): hodges_lehmann (HL-merged frame, up to
-      // maxVocab=20M rows, RankStats.scala) and dup_ngram_coverage
-      // (full-corpus shingle + dfs-ge2 frames) are memo USERS too — the
-      // r12 spelling missed them, so their MEMORY_AND_DISK frames stayed
-      // resident from mid stat_/text_ blocks through the rest of the
-      // sweep (ts_*, window_*), the same residency artifact this clear
-      // exists to prevent.
-      // r14: the sim_* block (memoized exact-kNN frame, IVF centroids),
-      // the emb_* block and the stat_* block (rank-tier contingency
-      // cells + rankedValues frames) are memo USERS now too — same
-      // region-boundary release convention as the dedup/graph blocks.
-      // startsWith("stat_") subsumes the r13 hodges_lehmann entry for the
-      // stat block; the substring form stays for auto_hodges_lehmann.
-      def memoFamily(n: String): Boolean =
-        n.contains("dedup") || n.contains("containment") ||
-          n.contains("ngram_jaccard") || n.startsWith("auto_") ||
-          n.startsWith("graph_") || n.contains("hodges_lehmann") ||
-          n.contains("dup_ngram_coverage") || n.startsWith("sim_") ||
-          n.startsWith("emb_") || n.startsWith("stat_")
-      val nextIsMemo = selected.lift(i + 1).exists(t => memoFamily(t._1))
-      if (memoFamily(name) && !nextIsMemo) {
-        graft.ext.Dedup.clearSharedCache(spark)
-        spark.catalog.clearCache()
       }
       name -> r
     }
@@ -202,10 +149,7 @@ object Bench {
       .map { case (k, v) => s""""${esc(k)}":${ms(v)}""" }.mkString("{", ",", "}")
     val errs = failed.map { case (k, e) => s""""${esc(k)}":"${esc(e)}"""" }.mkString("{", ",", "}")
     val total = timed.map(_._2).sum
-    // ADVICE r2: per-query dedup timings are order-dependent — the first
-    // dedup_* query's cold run absorbs the shared memoized tokenize/shingle
-    // pass (best-of-2 then reports the warm run); declare that in-band.
-    val note = "memoized shared frames (dedup shingles, jaccard wedge pairs, exact kNN, IVF centroids, PQ codes): each family's first member's cold run absorbs the build"
+    val note = "memos and caches released before each query: run 1 builds its memoized frames, run 2 reuses them"
     val calEnd = calibrate()
     val calLo = Seq(calStart, calMid, calEnd).filter(_ > 0).min
     val calHi = Seq(calStart, calMid, calEnd).max

@@ -23,7 +23,7 @@ object Explain {
       // cold plan per query (the PlanShapeSpec convention): a memo frame
       // built by an earlier query in this loop would surface in later
       // plans as InMemoryTableScan and hide the query's own shape
-      ext.Dedup.clearSharedCache(spark)
+      Memo.releaseAll(spark)
       spark.catalog.clearCache()
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

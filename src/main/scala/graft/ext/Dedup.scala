@@ -1,9 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Memo
 
 /** Deduplication operators over the documents table (SURVEY.md §2.10 X1/X2
   * plus SimHash and n-gram-Jaccard from the training-pipeline north star).
@@ -23,114 +22,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** Memoized shared frames, keyed by (session, canonicalized source plan,
-    * role). Canonicalized-plan equality is Catalyst's own sameResult test,
-    * so two independently-constructed scans of the same table share one
-    * cache entry. Values are persisted MEMORY_AND_DISK; they live until
-    * [[clearSharedCache]] or application end (an ApplicationEnd listener
-    * evicts automatically; bounded: one frame per (source table, role)).
-    *
-    * STALENESS CONTRACT: entries are keyed by the source *plan*, not the
-    * underlying bytes — if the files behind the same path are rewritten
-    * within one session (re-ingest, corpus refresh), the memoized frames
-    * keep serving the old snapshot. Any path that rewrites a corpus in
-    * place must call [[clearSharedCache]] before re-running dedup
-    * operators (the parquet snapshot a long session holds is stale the
-    * same way a `.cache()`d table would be). */
-  private val shared =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, LogicalPlan, String), DataFrame]
-
-  /** Sessions that already carry the eviction listener. */
-  private val hooked = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean])
-
-  private[graft] def memo(documents: DataFrame, role: String)(build: => DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    if (hooked.add(spark))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          try clearSharedCache(spark) catch { case _: Throwable => () }
-          hooked.remove(spark); ()
-        }
-      })
-    val key = (spark, documents.queryExecution.analyzed.canonicalized, role)
-    // r13 (VERDICT r12 #7, memo-lifecycle telemetry): every cache-boundary
-    // bug so far (r11 dedup_winnowing 33 s residency, r12 census-auto
-    // phantom 1.5×) was found by per-round forensics; one stderr line per
-    // build/hit/release makes the next one a log-diff read. Telemetry
-    // only — the hit probe races computeIfAbsent harmlessly (worst case a
-    // "hit" logs as "build" under contention; the memo itself stays
-    // single-build via computeIfAbsent's own atomicity).
-    val hit = shared.containsKey(key)
-    val out = shared.computeIfAbsent(key, _ => {
-      memoLog("build", role)
-      build.persist(StorageLevel.MEMORY_AND_DISK)
-    })
-    if (hit) memoLog("hit", role)
-    out
-  }
-
-  private def memoLog(event: String, role: String,
-      storage: String = "MEMORY_AND_DISK"): Unit =
-    System.err.println(s"[graft.memo] $event role=$role storage=$storage")
-
-  /** r14 (VERDICT r13 #2): driver-VALUE twin of [[memo]] for the bounded
-    * fitted artifacts the construction-job-heavy paths rebuild per query
-    * (the IVF Lloyd centroids: nCells×dims doubles, fitted by sequential
-    * collect jobs). Same key discipline (session, canonicalized source
-    * plan, role), same lifecycle ([[clearSharedCache]] / application
-    * end), same telemetry. Values must be BOUNDED driver metadata — the
-    * ≤nCells-centroid collect contract, never data-scaled rows. */
-  private val sharedVals =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, LogicalPlan, String), AnyRef]
-
-  private[graft] def memoVal[T <: AnyRef](source: DataFrame, role: String)(build: => T): T = {
-    val spark = source.sparkSession
-    val key = (spark, source.queryExecution.analyzed.canonicalized, role)
-    val hit = sharedVals.containsKey(key)
-    val out = sharedVals.computeIfAbsent(key, _ => {
-      memoLog("build", role, storage = "driver-value")
-      build
-    })
-    if (hit) memoLog("hit", role, storage = "driver-value")
-    out.asInstanceOf[T]
-  }
-
-  /** Drop and unpersist every shared frame belonging to `spark` (tests /
-    * long-lived sessions switching corpora). r13 (r12 ADVICE): also
-    * releases the interval-overlap family's tracked session-day DISK_ONLY
-    * persists — this function is the documented stale-corpus remedy, so
-    * it must cover every materialization a corpus rewrite can stale, not
-    * just the memo map. */
-  def clearSharedCache(spark: SparkSession): Unit = {
-    val it = shared.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        memoLog("release", e.getKey._3); e.getValue.unpersist(); it.remove()
-      }
-    }
-    val dit = dfsShared.entrySet().iterator()
-    while (dit.hasNext) {
-      // localCheckpoint'd frames release via RDD GC; dropping the entry is
-      // what un-stales a refreshed corpus
-      if (dit.next().getKey._1 eq spark) dit.remove()
-    }
-    val vit = sharedVals.entrySet().iterator()
-    while (vit.hasNext) {
-      val e = vit.next()
-      if (e.getKey._1 eq spark) {
-        memoLog("release", e.getKey._3, storage = "driver-value"); vit.remove()
-      }
-    }
-    Sessions.clearSessionDayPersists(spark)
-  }
+  /** Releases every [[graft.Memo]] entry of `spark`. Kept because the
+    * benchmark harness calls it (`e2ebench/src/BatchLoad.scala:80`,
+    * `e2ebench/src/Harness.scala:47`). */
+  def clearSharedCache(spark: SparkSession): Unit = Memo.releaseAll(spark)
 
   /** Shared tokenized corpus: (doc_id, t) with t = lowercased word tokens
     * (multiplicity preserved — SimHash weights votes by occurrence). */
   private def tokensOf(documents: DataFrame): DataFrame =
-    memo(documents, "tokens")(
+    Memo.frame(documents, "tokens")(
       documents.select(col("doc_id"), Text.tokens(col("text")).as("t")))
 
   /** Shared distinct trigram shingles per doc (docs shorter than 3 tokens
@@ -141,13 +41,10 @@ object Dedup {
     * order matches array_distinct; consumers are order-insensitive
     * anyway. */
   private def shingleSetsOf(documents: DataFrame): DataFrame = {
-    // resolve the tokens frame BEFORE the memo lambda: computeIfAbsent
-    // must never re-enter the same ConcurrentHashMap (recursive update)
-    val toks = tokensOf(documents)
     val spark = documents.sparkSession
     import spark.implicits._
-    memo(documents, "shingles")(
-      toks.as[(Long, Seq[String])]
+    Memo.frame(documents, "shingles")(
+      tokensOf(documents).as[(Long, Seq[String])]
         .mapPartitions(_.flatMap { case (id, t) =>
           if (t.length < 3) Iterator.empty
           else {
@@ -209,16 +106,6 @@ object Dedup {
       .toDF("doc_id", "n", "sh")
   }
 
-  /** Kept posting-df frames WITH their pair-expansion bound, keyed like
-    * [[shared]] plus the df cap. r12 (VERDICT r11 ADVICE): the bound is
-    * computed ONCE per (corpus, maxDf) at build — previously Escapes'
-    * routing pre-flight re-ran the df aggregation the builder immediately
-    * recomputed — and budget COMPARISONS moved outside the memo entirely
-    * (see [[pairCountsOf]]), so a frame memoized under one budget can no
-    * longer silently skip a later caller's stricter guard. */
-  private val dfsShared = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, LogicalPlan, String), (DataFrame, java.math.BigDecimal)]
-
   /** r11 (the sf3 shingle probe): the inverted-index family's pre-flight
     * metric — Σ df(df−1)/2 over the kept (2 ≤ df ≤ maxDf) shingle
     * postings, the EXACT ordered-pair expansion count the candidate
@@ -234,33 +121,28 @@ object Dedup {
     * pairs/s measured single-node, so the 2·10¹⁰ default (the shared
     * quadratic-budget figure) ≈ 3 min — past it the capped escape
     * (maxDf 64: bound saturates FLAT at 2016·vocab, 6·10⁷ here at every
-    * SF) is the declared route. */
+    * SF) is the declared route. Memoized per (corpus, maxDf), so the
+    * bound is computed once; budget comparisons run outside the memo on
+    * every call ([[pairCountsOf]]), so a frame built under one budget never
+    * skips a later caller's stricter guard. */
   private def keptDfsWithBound(documents: DataFrame,
-      maxDf: Int): (DataFrame, java.math.BigDecimal) = {
-    // resolve the postings frame BEFORE computeIfAbsent (its own memo
-    // lookups must not nest inside this map's update)
-    val ex = postingsOf(documents)
-    val spark = documents.sparkSession
-    dfsShared.computeIfAbsent(
-      (spark, documents.queryExecution.analyzed.canonicalized,
-        s"kept-dfs-$maxDf"),
-      _ => {
-        // The document-frequency cap is applied BEFORE posting-list
-        // collection downstream: this count aggregate (map-side partial,
-        // cheap) filters hot shingles so only surviving postings are ever
-        // collected into a list buffer.
-        val dfs = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, maxDf))
-          .localCheckpoint() // vocab-bounded; one postings scan, two readers
-        val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-        val bound = dfs.agg(coalesce(
-          sum(call_function("div", col("df").cast(dec) * (col("df") - 1),
-            lit(2L).cast(dec))),
-          lit(java.math.BigDecimal.ZERO).cast(dec)).as("b"))
-          .head().getDecimal(0)
-        (dfs, bound)
-      })
-  }
+      maxDf: Int): (DataFrame, java.math.BigDecimal) =
+    Memo.value(documents, s"kept-dfs-$maxDf") {
+      // The document-frequency cap is applied BEFORE posting-list
+      // collection downstream: this count aggregate (map-side partial,
+      // cheap) filters hot shingles so only surviving postings are ever
+      // collected into a list buffer.
+      val dfs = postingsOf(documents).groupBy(col("sh")).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, maxDf))
+        .localCheckpoint() // vocab-bounded; one postings scan, two readers
+      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+      val bound = dfs.agg(coalesce(
+        sum(call_function("div", col("df").cast(dec) * (col("df") - 1),
+          lit(2L).cast(dec))),
+        lit(java.math.BigDecimal.ZERO).cast(dec)).as("b"))
+        .head().getDecimal(0)
+      (dfs, bound)
+    }
 
   private[graft] def pairExpansionBound(documents: DataFrame,
       maxDf: Int = MaxShingleDf): java.math.BigDecimal =
@@ -293,7 +175,7 @@ object Dedup {
           "maxDf = 64 — bound saturates at 2016·vocab), provision a " +
           "cluster, or raise pairBudget knowingly.")
     val ex = postingsOf(documents)
-    memo(documents, s"pair-counts-$maxDf") {
+    Memo.frame(documents, s"pair-counts-$maxDf") {
       // Posting lists per shingle, then map-side ordered-pair expansion.
       // Only cap-surviving postings are collected, so the collect_list
       // buffer is bounded by maxDf. Collecting first and filtering after
@@ -339,7 +221,7 @@ object Dedup {
     * than 3 tokens report 0 shingles and a NULL fraction. */
   def textDupNgramCoverage(documents: DataFrame): DataFrame = {
     val ex = postingsOf(documents)
-    val dfs2 = memo(documents, "dfs-ge2")(
+    val dfs2 = Memo.frame(documents, "dfs-ge2")(
       ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2).select(col("sh")))
     val totals = shingleSetsOf(documents)
@@ -394,7 +276,7 @@ object Dedup {
     // (doc_b, rung) contingency frame — ≤ 9·docs rows, map-side partials
     // shrink the shuffle to that — so build it once and aggregate twice
     // on the TINY frame instead of twice on the pair frame.
-    val docRung = memo(documents, s"curve-doc-rung-$maxDf")(
+    val docRung = Memo.frame(documents, s"curve-doc-rung-$maxDf")(
       pairs.groupBy(col("doc_b"), col("rung"))
         .agg(count(lit(1)).as("cnt")))
     val pairHist = docRung.groupBy(col("rung")).agg(sum(col("cnt")).as("np"))
@@ -644,9 +526,8 @@ object Dedup {
   private[ext] def ccComponents(pairs: DataFrame): DataFrame = ccMinLabels(pairs)
 
   def dedupClusters(documents: DataFrame, threshold: Double = 0.3): DataFrame = {
-    // resolve the pair frame BEFORE the memo lambda (no nested computeIfAbsent)
-    val pairs = jaccardPairsOf(documents, threshold)
-    val labels = memo(documents, s"cc-labels:$threshold")(ccMinLabels(pairs))
+    val labels = Memo.frame(documents, s"cc-labels:$threshold")(
+      ccMinLabels(jaccardPairsOf(documents, threshold)))
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")
   }
@@ -708,7 +589,7 @@ object Dedup {
     * fixpoint is "the sum stopped falling" — no separate init job, no join
     * against the previous labels, and the driver only ever sees a 1-row
     * aggregate. The returned frame is memoized (role `cc-labels:<t>`) so
-    * repeated calls are free and [[clearSharedCache]] reclaims it. */
+    * repeated calls are free and [[graft.Memo.releaseAll]] reclaims it. */
   private def ccMinLabels(pairs: DataFrame): DataFrame = {
     // both directions in one pass over the memoized pair cache — cheap to
     // recompute per round, so no extra persist needed
@@ -963,9 +844,8 @@ object Dedup {
     // and the per-doc size frame) — without a materialization each
     // re-runs the tokenize → per-position md5 → winnow-window pass, the
     // single most expensive subtree in the query (measured 2.96 s at
-    // sf0.1; memoized 1.9 s). Same memo/clearSharedCache lifecycle as the
-    // shingle frames; Bench's dedup-region clear already covers the name.
-    val fpSet = memo(documents, s"winnow-fps-$k-$w")(grams
+    // sf0.1; memoized 1.9 s). Same Memo lifecycle as the shingle frames.
+    val fpSet = Memo.frame(documents, s"winnow-fps-$k-$w")(grams
       .withColumn("nb", count(lit(1)).over(wWin))
       .withColumn("sel", min(struct(col("h"), (-col("p")).as("np"))).over(wWin))
       .filter(col("nb") === w)

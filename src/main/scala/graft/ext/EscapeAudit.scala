@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** r13 (VERDICT r12 #6, completing the §2.13 escape-cascade audit): the
   * DEGRADATION of every declared exact/escape pair measured as a
@@ -20,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * — so the whole report is engine-exact and each oracle is the two
   * existing SQL templates spliced as subqueries over the same corpus
   * (the IVF_RECALL_SQL technique). No new pipeline machinery: the
-  * compositions ride the same memoized frames ([[Dedup.memo]]) and
+  * compositions ride the same memoized frames ([[graft.Memo]]) and
   * materializations their members already share, so the audit costs one
   * extra pass over small derived frames, not a rebuild.
   *
@@ -112,9 +111,7 @@ object EscapeAudit {
     * sweep, so it must refuse exactly where the exact member refuses. */
   def joinIntervalOverlapShed(events: DataFrame, gapMinutes: Int = 360,
       pairBudget: Long = 20000000000L): DataFrame = {
-    val sessDays = Sessions.registerSessionDayPersist(
-      Sessions.sessionDayFrame(events, gapMinutes)
-        .persist(StorageLevel.DISK_ONLY))
+    val sessDays = Sessions.sessionDays(events, gapMinutes)
     if (pairBudget > 0)
       Sessions.checkOverlapBudget(Sessions.dayPairBound(sessDays), pairBudget)
     val perPair = Sessions.sweptEpisodes(sessDays)

@@ -114,11 +114,7 @@ object Escapes {
     * over the largest table at 100 TB. */
   def intervalOverlap(events: DataFrame, gapMinutes: Int = 360,
       pairBudget: Long = 20000000000L): DataFrame = {
-    // r13 (r12 ADVICE): registered so Dedup.clearSharedCache — the
-    // documented stale-corpus remedy — also releases this materialization
-    val sessDays = Sessions.registerSessionDayPersist(
-      Sessions.sessionDayFrame(events, gapMinutes)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    val sessDays = Sessions.sessionDays(events, gapMinutes)
     val b = Sessions.dayPairBound(sessDays)
     if (b.compareTo(java.math.BigDecimal.valueOf(pairBudget)) <= 0) {
       log("join_interval_overlap", "day-pair bound", b, pairBudget, "exact")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det._
+import graft.Memo
 
 /** X6: batch sessionization — the deterministic oracle form of the
   * streaming session_window (SURVEY.md §2.9 T9, AIRWISEv0.py:81-96 gap
@@ -461,8 +462,8 @@ object Sessions {
     * [[graphLinkJaccard]]: DISTINCT ordered user pairs (a < b) active in
     * the same time bucket. One computation, many consumers (wedge legs,
     * closing-edge probe, degree census, neighbor lists) — memoized +
-    * persisted via the Dedup shared cache (same lifecycle:
-    * clearSharedCache / application end); without it Spark re-derives
+    * persisted via [[graft.Memo]] (released by `Memo.releaseAll` or
+    * application end); without it Spark re-derives
     * the distinct-pair build per consumer.
     *
     * r9: `bucket` is the REAL density knob the census docs promise (the
@@ -474,7 +475,7 @@ object Sessions {
     * graphs never alias. */
   private def coActivityEdges(events: DataFrame,
                               bucket: String = "minute"): DataFrame =
-    Dedup.memo(events, s"triangle-edges-$bucket") {
+    Memo.frame(events, s"triangle-edges-$bucket") {
       val active = events
         .select(col("user_id"), date_trunc(bucket, col("ts")).as("hr"))
         .distinct()
@@ -526,7 +527,7 @@ object Sessions {
   private[graft] def censusWedges(events: DataFrame,
       bucket: String = "minute"): java.math.BigDecimal = {
     val edges = coActivityEdges(events, bucket)
-    val deg = Dedup.memo(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     deg.agg(coalesce(
       sum(call_function("div", col("deg").cast(dec) * (col("deg") - 1),
@@ -545,7 +546,7 @@ object Sessions {
     * (measured: auto_link_jaccard 7.6 → parity with exact at sf0.1). */
   private[graft] def jaccardWedges(events: DataFrame): java.math.BigDecimal = {
     val edges = coActivityEdges(events)
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     deg.agg(coalesce(sum(col("deg").cast(dec) * col("deg")),
       lit(java.math.BigDecimal.ZERO).cast(dec)).as("w"))
@@ -579,15 +580,14 @@ object Sessions {
     * the credits directly, and the fine escapes / auto routers / the
     * census bucket-shift audit all hit the same memo — seven declared
     * consumers, one Σdeg^1.5-work self-join. deg and oriented stay their
-    * own memos (orientation joins, budget aggs, census read them too);
-    * sequential memo calls, never nested (Dedup.memo contract). */
+    * own memos (orientation joins, budget aggs, census read them too). */
   private def triangleCredits(events: DataFrame, bucket: String): DataFrame = {
     val edges = coActivityEdges(events, bucket)
-    val deg = Dedup.memo(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
-    val oriented = Dedup.memo(events, s"triangle-oriented-$bucket") {
+    val deg = Memo.frame(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
+    val oriented = Memo.frame(events, s"triangle-oriented-$bucket") {
       orientedEdges(edges, deg)
     }
-    Dedup.memo(events, s"triangle-credits-$bucket") {
+    Memo.frame(events, s"triangle-credits-$bucket") {
       // wedge at the order-minimal vertex: out-neighbors u ≺ w of the same
       // src, compared by (deg, id) — the orientation's own order
       val wedges = oriented.as("o1")
@@ -605,7 +605,7 @@ object Sessions {
   def graphTriangles(events: DataFrame, bucket: String = "minute",
       wedgeBudget: Long = 2000000000L): DataFrame = {
     val edges = coActivityEdges(events, bucket)
-    val deg = Dedup.memo(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
     censusWedgeBudget(deg, wedgeBudget, "graph_triangles", "graph_triangles_fine")
     // Σ per-node credits = 3 × the triangle count, exactly (each triangle
     // credits its three vertices once) — integer div restores the count
@@ -696,7 +696,7 @@ object Sessions {
   def graphLocalClustering(events: DataFrame, bucket: String = "minute",
       wedgeBudget: Long = 2000000000L): DataFrame = {
     val edges = coActivityEdges(events, bucket)
-    val deg = Dedup.memo(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
     censusWedgeBudget(deg, wedgeBudget,
       "graph_local_clustering", "graph_local_clustering_fine")
     // r14 OPT: the per-node credits ARE the census family's shared wedge
@@ -740,13 +740,13 @@ object Sessions {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
     val edges = coActivityEdges(events, bucket)
-    val deg = Dedup.memo(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, s"triangle-degrees-$bucket") { edgeDegrees(edges) }
     val wMode = Window.partitionBy(col("user_id"))
       .orderBy(col("cnt").desc, col("event_type"))
     // memoized: the modal-type dim feeds three consumers (both edge
     // endpoints + the degree rollup) — without the shared persist each
     // re-derives it with its own full fact scan
-    val comm = Dedup.memo(events, "modal-type-comm") {
+    val comm = Memo.frame(events, "modal-type-comm") {
       events
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
@@ -913,7 +913,7 @@ object Sessions {
     // r12: the symmetrized per-v neighbor count IS edgeDegrees' count on
     // the distinct-pair frame — share the census family's memoized build
     // instead of shuffling the 2|E| union a second time per consumer.
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     def commonOf(witnessNbrs: DataFrame): DataFrame = witnessNbrs.as("n1")
       .join(witnessNbrs.as("n2"), col("n1.w") === col("n2.w") &&
         col("n1.v") < col("n2.v"))
@@ -948,11 +948,10 @@ object Sessions {
         // jaccard (2.82 s), auto_link_jaccard's exact route (3.48 s) and
         // graph_link_jaccard_recall's exact member (3.82 s) each re-ran
         // the Σdeg² self-join + pair agg per consumer. Memoize the
-        // (a, b, common) pair frame under the census family's existing
-        // cache lifecycle (clearSharedCache / Bench memo-region clears);
+        // (a, b, common) pair frame in the shared Memo;
         // the budget pre-flight above still runs on EVERY call, so an
         // over-budget graph refuses before touching the memo.
-        Dedup.memo(events, "jaccard-common-minute") { commonOf(nbrs) }
+        Memo.frame(events, "jaccard-common-minute") { commonOf(nbrs) }
       }
     val scored = common.join(edges, Seq("a", "b"), "left_anti")
       .join(deg.select(col("v").as("a"), col("deg").as("deg_a")), Seq("a"))
@@ -988,7 +987,7 @@ object Sessions {
   def graphDegreeAssortativity(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val edges = coActivityEdges(events)
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     val dec0 = DecimalType(38, 0)
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
     edges
@@ -1031,7 +1030,7 @@ object Sessions {
     val spark = events.sparkSession
     import spark.implicits._
     val edges = coActivityEdges(events)
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     val ks = Seq(2L, 4L, 8L, 16L, 32L).toDF("k")
     val nodesAtK = deg.join(broadcast(ks), col("deg") > col("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n_nodes"))
@@ -1196,49 +1195,20 @@ object Sessions {
       .select(unix_micros(col("day").cast("timestamp")).as("day_us"),
         col("user_id"), col("session_num"), col("s_us"), col("e_us"))
 
+  /** [[sessionDayFrame]] materialized DISK_ONLY in [[graft.Memo]] (see
+    * [[intervalOverlapPlan]] for the storage level): every budgeted
+    * interval-overlap form reads one sessionize pass per (events, gap). */
+  private[graft] def sessionDays(events: DataFrame,
+      gapMinutes: Int): DataFrame =
+    Memo.frame(events, s"session-days-$gapMinutes",
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)(
+      sessionDayFrame(events, gapMinutes))
+
   /** The sustained-co-presence escape's episode floor (≥ 4 h), shared by
     * [[joinIntervalOverlapMin]] and [[Escapes.intervalOverlap]]'s over-
     * budget route so the auto form and the declared escape are the same
     * query. */
   private[graft] val SustainedOverlapUs: Long = 240 * 60000000L
-
-  /** Surgically drop the one-scan session-day materialization (r12,
-    * bench hygiene): `unpersist` matches the CacheManager entry by
-    * canonicalized plan, so rebuilding the frame expression here releases
-    * exactly the interval-overlap cache without touching other queries'
-    * live memo frames the way a global `clearCache` would (no-op when
-    * nothing is cached). */
-  private[graft] def unpersistSessionDays(events: DataFrame,
-      gapMinutes: Int = 360): Unit =
-    sessionDayFrame(events, gapMinutes).unpersist()
-
-  /** r13 (r12 ADVICE): every session-day DISK_ONLY persist is TRACKED per
-    * session, so [[graft.ext.Dedup.clearSharedCache]] — the documented
-    * stale-corpus remedy — also releases the interval-overlap
-    * materializations. Without this, a session that rewrites the events
-    * table in place and re-runs interval overlap silently reads the stale
-    * frame via the CacheManager's canonical-plan substitution, the exact
-    * staleness the Dedup memo contract warns about but (pre-r13) did not
-    * cover for this family. */
-  private val sessionDayPersists =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.SparkSession, java.util.Set[DataFrame]]
-
-  private[graft] def registerSessionDayPersist(df: DataFrame): DataFrame = {
-    sessionDayPersists.computeIfAbsent(df.sparkSession, _ =>
-      java.util.Collections.newSetFromMap(
-        new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]))
-      .add(df)
-    df
-  }
-
-  /** Unpersist and forget every tracked session-day materialization of
-    * `spark` (called from [[graft.ext.Dedup.clearSharedCache]]). */
-  private[graft] def clearSessionDayPersists(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val s = sessionDayPersists.remove(spark)
-    if (s != null) s.forEach(df => { df.unpersist(); () })
-  }
 
   /** Shared sweep plan for the interval-overlap pair; see
     * [[joinIntervalOverlap]]'s contract scaladoc above. r10: the exact
@@ -1256,7 +1226,6 @@ object Sessions {
     * escape `join_interval_overlap_min`. */
   private def intervalOverlapPlan(events: DataFrame, gapMinutes: Int,
       minOverlapUs: Long, pairBudget: Long): DataFrame = {
-    val sessDays0 = sessionDayFrame(events, gapMinutes)
     // r11 (VERDICT r10 #2), restored r12 (VERDICT r11 #1): ONE sessionize
     // pass. The pair-bound pre-flight is an action on the session-day
     // frame and the sweep re-reads it; without a materialization the
@@ -1271,10 +1240,8 @@ object Sessions {
     // execution-memory budget (sf1 re-measured 153 s — 15% under the
     // two-pass record). Only taken when a budget actually pre-flights;
     // the escape form (pairBudget = 0) is single-pass already.
-    val sessDays = if (pairBudget > 0)
-      registerSessionDayPersist(
-        sessDays0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    else sessDays0
+    val sessDays = if (pairBudget > 0) sessionDays(events, gapMinutes)
+    else sessionDayFrame(events, gapMinutes)
     if (pairBudget > 0)
       checkOverlapBudget(dayPairBound(sessDays), pairBudget)
     overlapSweep(sessDays, minOverlapUs)
@@ -1884,7 +1851,7 @@ object Sessions {
     * rides the memoized census degree frame; output ≤ 64 rows. */
   def graphDegreeHistogram(events: DataFrame): DataFrame = {
     val edges = coActivityEdges(events)
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     deg
       .withColumn("bucket", (length(bin(col("deg"))) - 1).cast("long"))
       .groupBy(col("bucket"))
@@ -1910,7 +1877,7 @@ object Sessions {
     * — no wedge join, linear in |E| at any density. */
   def graphAvgNeighborDegree(events: DataFrame): DataFrame = {
     val edges = coActivityEdges(events)
-    val deg = Dedup.memo(events, "triangle-degrees-minute") { edgeDegrees(edges) }
+    val deg = Memo.frame(events, "triangle-degrees-minute") { edgeDegrees(edges) }
     val directed = edges.select(explode(array(
       struct(col("a").as("v"), col("b").as("w")),
       struct(col("b").as("v"), col("a").as("w")))).as("e"))
@@ -2018,7 +1985,7 @@ object Sessions {
     val spark = events.sparkSession
     import spark.implicits._
     val edges = coActivityEdges(events)
-    val nbrs = Dedup.memo(events, "hop-nbrs-minute") {
+    val nbrs = Memo.frame(events, "hop-nbrs-minute") {
       edges.select(col("a").as("v"), col("b").as("w"))
         .union(edges.select(col("b").as("v"), col("a").as("w")))
     }

@@ -302,7 +302,7 @@ object Similarity {
     // fitted centroid array is nCells×dims doubles (bounded driver
     // metadata, the ≤nCells-centroid collect contract) — memoize it per
     // (corpus, nCells, lloydIters) under the shared-cache lifecycle.
-    val centroids = Dedup.memoVal(embeddings,
+    val centroids = graft.Memo.value(embeddings,
         s"ivf-centroids-$nCells-$lloydIters") {
       var cents = vecs.filter(_._1 < nCells).collect().sortBy(_._1)
         .map { case (id, v) => (id, v, math.sqrt(dotP(v, v))) }
@@ -451,7 +451,7 @@ object Similarity {
     exactPairPreflight(n, pairBudget, "dedup_embedding_cosine",
       "dedup_embedding_cosine_lsh")
     val blocks = if (nBlocks > 0) nBlocks else blocksFor(n, rowsPerBlock)
-    Dedup.memo(embeddings, s"emb-cosine-pairs-$threshold-$blocks") {
+    graft.Memo.frame(embeddings, s"emb-cosine-pairs-$threshold-$blocks") {
       val e = withNorm(embeddings).withColumn("blk", pmod(col("vec_id"), lit(blocks)))
       val blockPairs = spark.range(blocks).select(col("id").as("bi"))
         .crossJoin(spark.range(blocks).select(col("id").as("bj")))
@@ -579,7 +579,7 @@ object Similarity {
     // member (5.94 s total). Memoize the ranked n·k-row frame under the
     // shared-cache lifecycle; the pair-budget pre-flight above still runs
     // on every call. Output unchanged (the final orderBy stays outside).
-    val ranked = Dedup.memo(embeddings, s"knn-exact-$k-$blocks") {
+    val ranked = graft.Memo.frame(embeddings, s"knn-exact-$k-$blocks") {
       val pairs = a.join(broadcast(blockPairs), col("blka") === col("bi"))
         .join(b, col("blkb") === col("bj") &&
           (col("bi") =!= col("bj") || col("ida") < col("idb")))
@@ -946,7 +946,7 @@ object Similarity {
     * consumers read this core directly so they stop paying the
     * assignment's orderBy for an output their join immediately unorders.
     * NEGATIVE A/B (r14, recorded per guide §1): memoizing this frame
-    * (Dedup.memo role pq-codes-8-16) measured sim_search_pq_adc 0.97 →
+    * (Memo.frame role pq-codes-8-16) measured sim_search_pq_adc 0.97 →
     * 1.41 s WARM at sf0.1/32c — the cached InMemoryTableScan read plans
     * worse than the codegen'd inline recompute for the downstream
     * broadcast-ADC join — while emb_pq_codes only dropped 1.14 → 0.76.

@@ -766,9 +766,9 @@ object Text {
   /** The per-(source, token) corpus frequency frame shared by the
     * lexical-richness pair [[textYuleK]] / [[textHapaxRatio]] (r10) —
     * one tokenize scan, one vocab-bounded hash agg, memoized per
-    * dataset (the [[graft.ext.Dedup.memo]] shingle-pass discipline). */
+    * dataset in [[graft.Memo]]. */
   private def sourceTokenFreq(documents: DataFrame): DataFrame =
-    Dedup.memo(documents, "source-token-freq") {
+    graft.Memo.frame(documents, "source-token-freq") {
       documents
         .select(col("source"), explode(tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))

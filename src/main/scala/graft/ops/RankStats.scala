@@ -72,7 +72,7 @@ object RankStats {
     * [[rankedValues]] derivations serve the whole tier under the shared
     * cache lifecycle; every downstream frame stays vocab-bounded. */
   private def cellsAllMemo(events: DataFrame): DataFrame =
-    graft.ext.Dedup.memo(events, "rank-cells-all") {
+    graft.Memo.frame(events, "rank-cells-all") {
       events.filter(col("value").isNotNull)
         .select(col("event_type"), cents(col("value")).as("c"))
         .groupBy(col("c"), col("event_type")).agg(count(lit(1)).as("mv"))
@@ -80,7 +80,7 @@ object RankStats {
 
   private def cellsTwoMemo(events: DataFrame, classA: String,
       classB: String): DataFrame =
-    graft.ext.Dedup.memo(events, s"rank-cells-$classA-$classB") {
+    graft.Memo.frame(events, s"rank-cells-$classA-$classB") {
       events
         .filter(col("value").isNotNull && col("event_type").isin(classA, classB))
         .select(col("event_type"), cents(col("value")).as("c"))
@@ -88,11 +88,10 @@ object RankStats {
     }
 
   /** Memoized [[rankedValues]] over a memoized cells frame; `role` names
-    * the cells frame (resolve the cells memo BEFORE this call — memo
-    * calls are sequential, never nested). */
+    * the cells frame. */
   private def rankedValuesMemo(events: DataFrame, cells: DataFrame,
       role: String): DataFrame =
-    graft.ext.Dedup.memo(events, s"rank-rv-$role")(rankedValues(cells))
+    graft.Memo.frame(events, s"rank-rv-$role")(rankedValues(cells))
 
   /** Kruskal–Wallis H across every event_type's value distribution, tie
     * corrected:
@@ -777,7 +776,7 @@ object RankStats {
     val u = lit(unitCents)
     val cq = if (unitCents == 1L) raw
       else idiv(raw - (((raw % u) + u) % u), u)
-    graft.ext.Dedup.memo(events, s"hl-merged-$classA-$classB-$unitCents") {
+    graft.Memo.frame(events, s"hl-merged-$classA-$classB-$unitCents") {
       events
         .filter(col("value").isNotNull && col("event_type").isin(classA, classB))
         .select(col("event_type"), cq.as("c"))

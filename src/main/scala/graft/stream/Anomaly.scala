@@ -98,7 +98,7 @@ object Anomaly {
   }
 
   /** Packets stream → per-node trailing-window anomaly rows. Requires the
-    * RocksDB state store provider, as [[Heartbeat.monitorTws]]. */
+    * RocksDB state store provider. */
   def rateAnomalyStream(packets: Dataset[Packet],
                         bucketMs: Long = 60L * 60 * 1000,
                         window: Int = 24,

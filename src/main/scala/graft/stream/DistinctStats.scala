@@ -75,7 +75,7 @@ object DistinctStats {
   }
 
   /** (key, hash) stream → per-micro-batch distinct estimates. Requires
-    * the RocksDB state store provider, as [[Heartbeat.monitorTws]]. */
+    * the RocksDB state store provider. */
   def distinctStream(rows: Dataset[KeyedHash], k: Int = 256,
                      ttlMs: Long = 60L * 60 * 1000): Dataset[DistinctRow] = {
     val spark = rows.sparkSession

@@ -50,7 +50,7 @@ object DrawdownStream {
   }
 
   /** (node, ts, cents) stream → per-reading running drawdown. Requires
-    * the RocksDB state store provider, as [[Heartbeat.monitorTws]]. */
+    * the RocksDB state store provider. */
   def drawdownStream(points: Dataset[ValuePoint],
                      ttlMs: Long = 60L * 60 * 1000): Dataset[DrawdownRow] = {
     val spark = points.sparkSession

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful monitoring (SURVEY.md §2.9 T3–T5): per-node heartbeat tracking,
@@ -86,76 +86,5 @@ object Heartbeat {
       .groupByKey(_.node)
       .flatMapGroupsWithState[NodeState, NodeEvent](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(update(offlineMs, retire))
-  }
-
-  /** The same OFFLINE / ONLINE / RETIRED machine on Spark 4's
-    * `transformWithState` (the contemporary stateful API, VERDICT r3 #6):
-    * keyed [[ValueState]] holds the NodeState, and the offline/retire
-    * horizons are native PROCESSING-TIME TIMERS instead of the single
-    * hand-armed `setTimeoutDuration` slot — `handleExpiredTimer` receives
-    * the expiry instead of re-checking clocks, and state.clear() on
-    * RETIRED is the same hard TTL. Requires the RocksDB state store
-    * provider (bundled; [[monitorTws]] leaves the provider to the session
-    * conf so tests set it on the query). Semantics are deliberately
-    * IDENTICAL to [[monitor]] — the spec drives both to the same
-    * transitions. */
-  class HeartbeatProcessor(offlineMs: Long, retireMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Packet, NodeEvent] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var state: ValueState[NodeState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[NodeState](
-        "node", Encoders.product[NodeState], TTLConfig.NONE)
-
-    /** One live timer per key: re-arming first deletes whatever is
-      * registered (the fMGWS timeout slot semantics, made explicit). */
-    private def rearm(atMs: Long): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(atMs)
-    }
-
-    override def handleInputRows(node: Long, packets: Iterator[Packet],
-                                 timers: TimerValues): Iterator[NodeEvent] = {
-      val newest = packets.map(_.ts_ms).foldLeft(Long.MinValue)(math.max)
-      val prev = if (state.exists()) Option(state.get()) else None
-      val recovered = prev.exists(_.alertSent)
-      val lastSeen = math.max(prev.map(_.lastSeenMs).getOrElse(Long.MinValue), newest)
-      state.update(NodeState(lastSeen, alertSent = false))
-      rearm(timers.getCurrentProcessingTimeInMs() + offlineMs)
-      if (recovered) Iterator(NodeEvent(node, "ONLINE", newest)) else Iterator.empty
-    }
-
-    override def handleExpiredTimer(node: Long, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[NodeEvent] = {
-      if (!state.exists()) return Iterator.empty // raced a concurrent clear
-      val st = state.get()
-      if (st.alertSent) {
-        state.clear()
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        Iterator(NodeEvent(node, "RETIRED", timers.getCurrentProcessingTimeInMs()))
-      } else {
-        state.update(st.copy(alertSent = true))
-        rearm(timers.getCurrentProcessingTimeInMs() + retireMs)
-        Iterator(NodeEvent(node, "OFFLINE", timers.getCurrentProcessingTimeInMs()))
-      }
-    }
-  }
-
-  /** [[monitor]] on the transformWithState engine. Same derived retire
-    * horizon. */
-  def monitorTws(packets: Dataset[Packet],
-                 offlineMs: Long = OfflineThresholdMs,
-                 retireMs: Long = 0L): Dataset[NodeEvent] = {
-    val spark = packets.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val retire = if (retireMs > 0) retireMs else retireFor(offlineMs)
-    packets
-      .groupByKey(_.node)
-      .transformWithState(new HeartbeatProcessor(offlineMs, retire),
-        TimeMode.ProcessingTime(), OutputMode.Append())
   }
 }

@@ -10,13 +10,10 @@ import graft.stream.Heartbeat.Packet
   * :127/:187/:210), emitted as a continuously-updated (node, count,
   * last-seen) stream.
   *
-  * Where [[Heartbeat.HeartbeatProcessor]] needs explicit timers (it must
-  * EMIT on expiry), these totals just need to not accumulate forever —
-  * exactly what `TTLConfig` is for: state idle past the TTL is evicted by
-  * the store itself, no timer bookkeeping, so fleet churn can't grow state
-  * unboundedly and a long-idle node simply restarts its tally. The two
-  * processors together cover both halves of the Spark-4 state API: timers
-  * (act on expiry) and TTL (forget on expiry).
+  * These totals just need to not accumulate forever — exactly what
+  * `TTLConfig` is for: state idle past the TTL is evicted by the store
+  * itself, no timer bookkeeping, so fleet churn can't grow state
+  * unboundedly and a long-idle node simply restarts its tally.
   */
 object RunningStats {
 
@@ -50,7 +47,7 @@ object RunningStats {
 
   /** Packets stream → cumulative per-node stat rows. State idle past
     * `ttlMs` is evicted natively (no timers). Requires the RocksDB state
-    * store provider, as [[Heartbeat.monitorTws]]. */
+    * store provider. */
   def totalsStream(packets: Dataset[Packet],
                    ttlMs: Long = 60L * 60 * 1000): Dataset[StatRow] = {
     val spark = packets.sparkSession

@@ -30,7 +30,7 @@ class CcCheckpointSpec extends SparkSpec {
   test("reliable opt-in without a checkpoint dir fails fast") {
     assume(spark.sparkContext.getCheckpointDir.isEmpty,
       "a checkpoint dir is already set on the shared context")
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     spark.conf.set(Dedup.CcReliableConf, "true")
     try {
       val e = intercept[IllegalStateException] {
@@ -39,7 +39,7 @@ class CcCheckpointSpec extends SparkSpec {
       assert(e.getMessage.contains("checkpoint dir"))
     } finally {
       spark.conf.unset(Dedup.CcReliableConf)
-      Dedup.clearSharedCache(spark)
+      Memo.releaseAll(spark)
     }
   }
 
@@ -51,7 +51,7 @@ class CcCheckpointSpec extends SparkSpec {
 
     // fresh fixpoint (the labels memo is keyed by source plan — clear it
     // so the reliable path actually recomputes)
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     spark.conf.set(Dedup.CcReliableConf, "true")
     spark.conf.set(Dedup.CcCheckpointDirConf, dir)
     try {
@@ -66,7 +66,7 @@ class CcCheckpointSpec extends SparkSpec {
     } finally {
       spark.conf.unset(Dedup.CcReliableConf)
       spark.conf.unset(Dedup.CcCheckpointDirConf)
-      Dedup.clearSharedCache(spark)
+      Memo.releaseAll(spark)
     }
   }
 }

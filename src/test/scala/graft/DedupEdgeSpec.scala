@@ -55,7 +55,7 @@ class DedupEdgeSpec extends SparkSpec {
       (3L, long1 + "extra trailing tokens appended"), // new: near-dup -> near_dup of 2 (lowest)
       (5L, "completely novel text with words appearing nowhere else at all yes")
     ).toDF("doc_id", "text")
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val out = Dedup.dedupIncremental(corpus, threshold = 0.3).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[String]("status"), Option(r.getAs[java.lang.Long]("dup_of")).map(_.toLong))))
@@ -64,11 +64,11 @@ class DedupEdgeSpec extends SparkSpec {
     assert(out(3L)._1 == "near_dup" && out(3L)._2 == Some(2L), out.toString)
     assert(out(5L) == (("new", None)), out.toString)
     // degenerate corpora: an all-even corpus has an empty new batch
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     assert(Dedup.dedupIncremental(
       Seq((2L, "a b c"), (4L, "d e f")).toDF("doc_id", "text")).count() == 0)
     // an all-odd corpus has an empty store: everything admits as new
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val allNew = Dedup.dedupIncremental(
       Seq((1L, long1), (3L, long1)).toDF("doc_id", "text")).collect()
     assert(allNew.length == 2 && allNew.forall(_.getAs[String]("status") == "new"))

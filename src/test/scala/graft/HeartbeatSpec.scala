@@ -106,41 +106,6 @@ class HeartbeatSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState path: OFFLINE then ONLINE on the native timer API") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Packet]
-    val events = Heartbeat.monitorTws(input.toDS(), offlineMs = 2000L)
-    val q = events.writeStream.format("memory").queryName("hb_tws")
-      .outputMode("append").start()
-    try {
-      input.addData(Packet(1L, 1000L))
-      val deadline = System.currentTimeMillis() + 60000
-      def eventsSoFar() =
-        spark.sql("SELECT event FROM hb_tws").collect().map(_.getString(0)).toSeq
-      while (!eventsSoFar().contains("OFFLINE") && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      assert(eventsSoFar() == Seq("OFFLINE"), "exactly one OFFLINE after silence")
-      input.addData(Packet(1L, 5000L))
-      while (!eventsSoFar().contains("ONLINE") && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      assert(eventsSoFar().sorted == Seq("OFFLINE", "ONLINE"),
-        "one recovery ONLINE, no duplicate OFFLINE")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("monitor() wires into a streaming query (MemoryStream round-trip)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

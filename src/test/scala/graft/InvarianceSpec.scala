@@ -52,9 +52,9 @@ class InvarianceSpec extends SparkSpec {
   }
 
   test("incremental dedup verdicts are partitioning-independent") {
-    Dedup.clearSharedCache(spark) // shingle memo keyed by plan — clear between A/B
+    Memo.releaseAll(spark) // shingle memo keyed by plan — clear between A/B
     val a = rows(Dedup.dedupIncremental(docs.coalesce(1)))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val b = rows(Dedup.dedupIncremental(docs.repartition(13)))
     assert(a == b)
   }
@@ -100,9 +100,9 @@ class InvarianceSpec extends SparkSpec {
   }
 
   test("connected-components labels are partitioning-independent") {
-    Dedup.clearSharedCache(spark) // memoized labels would defeat the A/B
+    Memo.releaseAll(spark) // memoized labels would defeat the A/B
     val a = rows(Dedup.dedupClusters(docs.coalesce(1)))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val b = rows(Dedup.dedupClusters(docs.repartition(13)))
     assert(a == b)
   }
@@ -281,9 +281,9 @@ class InvarianceSpec extends SparkSpec {
     assert(rows(Text.textVocabCoverage(docs.coalesce(1))) ==
       rows(Text.textVocabCoverage(docs.repartition(13))))
     // minhash estimator: band keys + slot agreement are per-doc functions
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val a = rows(Dedup.dedupMinhashEst(docs.coalesce(1)))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val b = rows(Dedup.dedupMinhashEst(docs.repartition(13)))
     assert(a == b)
     // rate sampling is map-side: trivially invariant, but the claim is load-bearing
@@ -303,9 +303,9 @@ class InvarianceSpec extends SparkSpec {
     assert(rows(graft.ops.Joins.tsIntervalUnion(events.coalesce(1))) ==
       rows(graft.ops.Joins.tsIntervalUnion(events.repartition(13))))
     // triangles: census counts are integers; memoized edges cleared between runs
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val t1 = rows(graft.ext.Sessions.graphTriangles(events.coalesce(1)))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val t13 = rows(graft.ext.Sessions.graphTriangles(events.repartition(13)))
     assert(t1 == t13)
   }
@@ -329,9 +329,9 @@ class InvarianceSpec extends SparkSpec {
     assert(rows(graft.ext.Similarity.simSearchHammingTopk(emb.coalesce(1))) ==
       rows(graft.ext.Similarity.simSearchHammingTopk(emb.repartition(13))))
     // link prediction: integer common/union counts; memoized edges cleared
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val j1 = rows(graft.ext.Sessions.graphLinkJaccard(events.coalesce(1)))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     val j13 = rows(graft.ext.Sessions.graphLinkJaccard(events.repartition(13)))
     assert(j1 == j13)
     // rolling distinct, schema union, position profile, rules filter

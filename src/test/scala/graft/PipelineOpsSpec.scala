@@ -90,7 +90,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(pair.get.getAs[Double]("err") == 0.0)
     // no candidate pair against the unrelated doc
     assert(out.forall(r => r.getAs[Long]("doc_b") != 3L))
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
   }
 
   test("stratified rate sampling: head class thinned, tail untouched, map-side") {

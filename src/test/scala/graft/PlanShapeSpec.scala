@@ -78,7 +78,7 @@ class PlanShapeSpec extends SparkSpec {
       SparkEntry.queries.toSeq.map { case (n, fn) =>
         n -> (() => fn(spark, sf)) } ++ prepasses
     val current = all.sortBy(_._1).map { case (name, fn) =>
-      ext.Dedup.clearSharedCache(spark)
+      Memo.releaseAll(spark)
       spark.catalog.clearCache()
       val plan = fn().queryExecution.executedPlan.toString
       Files.write(dumpDir.resolve(s"$name.txt"), plan.getBytes(UTF_8))
@@ -125,7 +125,7 @@ class PlanShapeSpec extends SparkSpec {
     * timing. Pin it structurally: every rankByRange consumer's plan must
     * read the parted frame through InMemoryTableScan in BOTH branches. */
   test("Dist.rankByRange single evaluation is structural (persist pinned)") {
-    ext.Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     spark.catalog.clearCache()
     for (q <- Seq("stat_gini_revenue", "events_rfm_scores", "events_pareto_deciles")) {
       val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString

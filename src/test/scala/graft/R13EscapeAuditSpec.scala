@@ -184,6 +184,6 @@ class R13EscapeAuditSpec extends SparkSpec {
     // SOME — recall strictly inside (0, 1)
     assert(mh.nonEmpty, "banding lost every borderline pair — widen the fixture")
     assert(mh.size < 40, "banding kept every borderline pair — fixture cannot measure the trade")
-    Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
   }
 }

@@ -89,11 +89,11 @@ class R13RecallSpec extends SparkSpec {
     val sd = ext.Sessions.sessionDayFrame(ev, 360)
     assert(sd.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "expected the session-day frame to be cached after intervalOverlap")
-    ext.Dedup.clearSharedCache(spark)
+    Memo.releaseAll(spark)
     // ... and the documented stale-corpus remedy releases it — a corpus
     // rewrite cannot be served a stale materialization afterwards
     assert(ext.Sessions.sessionDayFrame(ev, 360).storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
-      "session-day persist survived clearSharedCache")
+      "session-day persist survived Memo.releaseAll")
   }
 }

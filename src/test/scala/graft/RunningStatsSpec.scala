@@ -4,9 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.stream.Heartbeat.Packet
 import graft.stream.RunningStats
 
-/** The TTLConfig half of the Spark-4 state API (timers are covered by
-  * HeartbeatSpec's transformWithState test): cumulative per-node tallies
-  * across micro-batches, and native eviction of idle state.
+/** The TTLConfig half of the Spark-4 state API: cumulative per-node
+  * tallies across micro-batches, and native eviction of idle state.
   *
   * NOTE: transformWithState with TimeMode.ProcessingTime keeps scheduling
   * micro-batches (like fMGWS with timeouts armed), so

@@ -43,6 +43,7 @@ class SoakStreamSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     val t0 = System.nanoTime()
+    val hardCap = System.currentTimeMillis() + 1800000L
     try {
       var batch = 0
       while (batch < Batches) {
@@ -53,7 +54,16 @@ class SoakStreamSpec extends SparkSpec {
             s"""{"from":$node,"payload":{"temperature":2${k % 10}.5},"timestamp":${1760748340L + batch * 60 + k},"type":"telemetry"}"""
           }
         }
-        input.addData(rows)
+        // one batch in flight at a time: wait until the query has read
+        // this one before generating the next, so the source never holds
+        // the whole 5M-envelope feed at once. (processAllAvailable() never
+        // returns here: the armed processing-time timeouts schedule a
+        // batch on every trigger.)
+        val end = input.addData(rows).json.toLong
+        def read(): Boolean = Option(q.lastProgress)
+          .flatMap(p => Option(p.sources.head.endOffset)).exists(_.toLong >= end)
+        while (!read() && System.currentTimeMillis() < hardCap)
+          assert(!q.awaitTermination(100), "query stopped mid-feed")
         batch += 1
       }
       val totalKeys = Batches.toLong * NodesPerBatch
@@ -82,7 +92,6 @@ class SoakStreamSpec extends SparkSpec {
         }
       })
       val stallMs = 180000L
-      val hardCap = System.currentTimeMillis() + 1800000L
       def engineProgress(): Seq[Long] = tasksDone.get() +:
         Option(q.lastProgress).toSeq.flatMap(p =>
           Seq(p.batchId, p.numInputRows, p.stateOperators.map(_.numRowsTotal).sum))
