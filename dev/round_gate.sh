@@ -5,7 +5,7 @@
 # judge time; this script is the cheap insurance.
 #
 # Usage:
-#   dev/round_gate.sh quick   # marker grep + PlanShapeSpec/PlanLintSpec (~5 min)
+#   dev/round_gate.sh quick   # marker grep + PlanShapeSpec/PlanLintSpec/TablesSpec (~5 min)
 #   dev/round_gate.sh full    # marker grep + the whole suite
 #
 # Exit codes: 0 = safe to commit; nonzero = DO NOT COMMIT (reason printed).
@@ -35,8 +35,9 @@ for rec in $staged_bench; do
 done
 
 # 2. The suite (or its structural core) must be green on the tree as-is.
+#    TablesSpec pins the table loaders' schemas to Spark's inference.
 case "$mode" in
-  quick) sbt -batch "testOnly graft.PlanShapeSpec graft.PlanLintSpec" ;;
+  quick) sbt -batch "testOnly graft.PlanShapeSpec graft.PlanLintSpec graft.TablesSpec" ;;
   full)  sbt -batch test ;;
   *) echo "usage: dev/round_gate.sh [quick|full]" >&2; exit 1 ;;
 esac

@@ -109,6 +109,11 @@ class MqttResilienceSpec extends AnyFunSuite {
       val second = broker.expectHandshake()
       broker.dropConnection()
       assert(second.await(15, TimeUnit.SECONDS), "subscriber re-handshook after drop")
+      // The broker counts the handshake down once it has written SUBACK; the
+      // subscriber counts the reconnect only after it has read it.
+      val deadlineR = System.currentTimeMillis() + 10000
+      while (sub.reconnectCount < 1 && System.currentTimeMillis() < deadlineR)
+        Thread.sleep(50)
       assert(sub.reconnectCount == 1)
       assert(sub.isRunning)
 
